@@ -1,17 +1,24 @@
 """Wall and CPU time of the benchmark's whole process tree.
 
-On a shared machine other tenants' load stretches wall time by up to
-twofold from one run to the next, while the CPU time this process tree
-spends on the same work stays close to constant. Every operation is
-therefore timed both ways: `Clock.now()` returns (wall seconds, CPU
-seconds), where CPU seconds are the user plus system time of this Python
-process, the Spark JVM, and every live or reaped descendant of the JVM
-(the Python worker daemon and its workers), read from `/proc`.
+Every operation is timed both ways: `Clock.now()` returns (wall seconds,
+CPU seconds), where CPU seconds are the user plus system time of this
+Python process, the Spark JVM, and every live or reaped descendant of
+the JVM (the Python worker daemon and its workers), read from `/proc`.
+CPU seconds leave out the time the tree waits for a core or for I/O.
 
 The JVM's JIT compiler threads count too: in a JVM started seconds ago
 they still take about a third of its CPU, but leaving them out made the
 per-operation figures noisier, not steadier (code not yet compiled costs
 its callers more), so the whole tree is the steadier measure.
+
+CPU seconds still follow the host's speed. On a shared 4-vCPU VM, other
+tenants' load slowed whole runs about twofold for minutes at a time,
+wall and CPU seconds alike (their ratio stayed near 2.3), so runs that
+are to be compared should run in one stretch. Scaling by a calibration
+kernel timed in the same run did not help: a single-threaded kernel's
+speed swung between 13 and 23 ms within seconds while the engine's
+multi-threaded figures held steady, which made the scaled figures
+noisier than the raw ones.
 """
 
 from __future__ import annotations
@@ -30,15 +37,29 @@ def _read(path: str) -> bytes | None:
         return None
 
 
-def _stat(pid: int) -> tuple[int, float, float] | None:
-    """(ppid, own CPU seconds, reaped children's CPU seconds)."""
+def _stat(pid: int) -> tuple[float, float] | None:
+    """(own CPU seconds, reaped children's CPU seconds)."""
     raw = _read(f"/proc/{pid}/stat")
     if raw is None:
         return None
     fields = raw[raw.rindex(b")") + 2:].split()
-    # fields[1] is ppid; utime, stime, cutime, cstime are fields[11:15]
+    # utime, stime, cutime, cstime are fields[11:15]
     ut, st, cut, cst = (int(x) for x in fields[11:15])
-    return int(fields[1]), (ut + st) / _TICK, (cut + cst) / _TICK
+    return (ut + st) / _TICK, (cut + cst) / _TICK
+
+
+def _children(pid: int) -> list[int]:
+    """Live children of every thread of `pid`."""
+    out: list[int] = []
+    try:
+        tids = os.listdir(f"/proc/{pid}/task")
+    except OSError:
+        return out
+    for tid in tids:
+        raw = _read(f"/proc/{pid}/task/{tid}/children")
+        if raw:
+            out.extend(int(x) for x in raw.split())
+    return out
 
 
 class Clock:
@@ -46,26 +67,19 @@ class Clock:
         self.jvm_pid = jvm_pid
 
     def cpu(self) -> float:
-        total = time.process_time()
-        if self.jvm_pid is None:
-            return total
-        stats = {}
-        for name in os.listdir("/proc"):
-            if name.isdigit():
-                st = _stat(int(name))
-                if st is not None:
-                    stats[int(name)] = st
-        children: dict[int, list[int]] = {}
-        for pid, (ppid, _, _) in stats.items():
-            children.setdefault(ppid, []).append(pid)
-        todo = [self.jvm_pid]
+        """CPU seconds of the JVM's process tree, walked through each
+        process's own children list (never a scan of every process on
+        the host), plus this process's CPU read last, so the walk's own
+        cost is not inside the reading it starts."""
+        total = 0.0
+        todo = [] if self.jvm_pid is None else [self.jvm_pid]
         while todo:
             pid = todo.pop()
-            if pid in stats:
-                _, own, reaped = stats[pid]
-                total += own + reaped
-                todo.extend(children.get(pid, []))
-        return total
+            st = _stat(pid)
+            if st is not None:
+                total += st[0] + st[1]
+                todo.extend(_children(pid))
+        return total + time.process_time()
 
     def now(self) -> tuple[float, float]:
         return time.perf_counter(), self.cpu()

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import statistics
 
+from .corpus import ENTITY_TYPES
 from .trace import SPARK_FIELDS
 
 # gated metric -> (unit, key of the CPU-second value computed below)
@@ -33,16 +34,12 @@ END_TO_END = {
     "throughput_per_cpu_s": ("1/s", "throughput_per_s"),
 }
 
-IMPORT_TYPES = (
-    "artists", "areleases", "areleases-artists", "labels", "releases",
-    "releases-artists", "media",
-)
 TEMPLATES = ("point_lookup", "ref_join", "filtered_aggregate", "unbound_attribute")
 
 PER_LAYER = {
     "sources.edn_source.parse_s": "s",
     "sources.edn_source.rows_per_s": "1/s",
-    **{f"pipeline.load_type.{t}.{k}": u for t in IMPORT_TYPES
+    **{f"pipeline.load_type.{t}.{k}": u for t in ENTITY_TYPES
        for k, u in (("s", "s"), ("jobs", "count"))},
     "operators.transform.build_s": "s",
     "operators.transform.eager_jobs": "count",
@@ -81,7 +78,14 @@ PER_LAYER = {
     "trace.spans": "count",
     "trace.read_p50_cpu_s": "s",
     "trace.write_p50_cpu_s": "s",
+    "trace.read_overhead_cpu_s": "s",
+    "trace.write_overhead_cpu_s": "s",
 }
+
+# op kinds behind read_p50_cpu_s and write_p50_cpu_s; the traced run times
+# every second repetition of them untraced, to give the tracing overhead
+READ_KINDS = {"import": ("reimport",), "serve": ("query", "pull")}
+WRITE_KINDS = {"import": (), "serve": ("transact",)}
 
 
 def median(xs) -> float:
@@ -133,8 +137,9 @@ def end_to_end(workload: str, res, session: tuple, rss_mb: float) -> tuple[dict,
             units = {"import_rows_per_s": "1/s"}
         else:
             reads = _pool(res, ("query", "pull"), cpu)
-            n_ops = sum(len(res.samples.get(k, [])) for k in
-                        ("query", "pull", "transact", "read_after_write", "index"))
+            n_ops = sum(len(res.samples.get(k + sfx, [])) for k in
+                        ("query", "pull", "transact", "read_after_write", "index")
+                        for sfx in ("", ".untraced"))
             v = {"read_p50_s": p50("query", "pull"), "write_p50_s": p50("transact"),
                  "index_p50_s": p50("index"),
                  "throughput_per_s": (n_ops / measured if measured else 0.0, n_ops)}
@@ -195,15 +200,18 @@ def per_layer(workload: str, tracer, res) -> dict:
             out["sources.edn_source.rows_per_s"] = (
                 sum(res.facts["rows"].values()) / out["sources.edn_source.parse_s"])
         first_pass = _within(tracer, "pipeline.run_import")
-        for t in IMPORT_TYPES:
+        for t in ENTITY_TYPES:
             out[f"pipeline.load_type.{t}.s"] = sum(secs(f"pipeline.load_type.{t}", first_pass))
             out[f"pipeline.load_type.{t}.jobs"] = sum(jobs(f"pipeline.load_type.{t}", first_pass))
         for layer in ("transform", "batching"):
             out[f"operators.{layer}.build_s"] = sum(secs(f"operators.{layer}", first_pass))
             out[f"operators.{layer}.eager_jobs"] = sum(jobs(f"operators.{layer}", first_pass))
+        # every traced load: the pass, and the re-runs' marker fast path
         writes = spans("operators.idempotency.write")
-        written = sum(s.attrs.get("batches_written", 0) for s in writes)
-        attempted = sum(s.attrs.get("batches_attempted", 0) for s in writes)
+        written = sum(s.attrs["batches_written"] for s in writes)
+        attempted = sum(s.attrs["batches_attempted"] for s in writes) + sum(
+            s.attrs.get("fast_path_batches", 0) for t in ENTITY_TYPES
+            for s in spans(f"pipeline.load_type.{t}"))
         out["operators.idempotency.write_s"] = sum(s.seconds for s in writes)
         out["operators.idempotency.batches_written"] = written
         out["operators.idempotency.batches_attempted"] = attempted
@@ -244,6 +252,11 @@ def per_layer(workload: str, tracer, res) -> dict:
         out["plans.eav.bytes_rewritten_per_op"] = median(
             [s.attrs["bytes_rewritten"] / s.attrs["ops"] for s in idx if s.attrs["ops"]])
         out["plans.eav.files_after"] = idx[-1].attrs["files_after"] if idx else 0
+    for name, kinds in (("read", READ_KINDS[workload]), ("write", WRITE_KINDS[workload])):
+        traced = _pool(res, kinds, cpu=True)
+        untraced = _pool(res, [k + ".untraced" for k in kinds], cpu=True)
+        if traced and untraced:
+            out[f"trace.{name}_overhead_cpu_s"] = median(traced) - median(untraced)
     out["trace.self_s"] = tracer.self_s
     out["trace.spans"] = len(tracer.spans)
     return out

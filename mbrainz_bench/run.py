@@ -187,17 +187,10 @@ def main(argv=None) -> int:
     }
     if args.trace:
         layers = metrics.per_layer(args.workload, tracer, res)
+        # the traced run's own figures, beside the overhead per_layer gives
         layers["trace.read_p50_cpu_s"] = e2e["read_p50_cpu_s"]["value"]
         layers["trace.write_p50_cpu_s"] = e2e["write_p50_cpu_s"]["value"]
         out = {k: {"value": layers[k], "unit": u} for k, u in metrics.PER_LAYER.items()}
-        untraced = os.path.join(results, f"{args.workload}-seed{args.seed}-trace0.json")
-        if os.path.exists(untraced):
-            with open(untraced, encoding="utf-8") as fh:
-                base = json.load(fh)["end_to_end"]
-            record["trace_overhead"] = {
-                k: e2e[k]["value"] - base[k]["value"]
-                for k in ("read_p50_cpu_s", "write_p50_cpu_s", "index_p50_cpu_s")
-            }
         tracer.write(os.path.join(results, f"{tag}.spans.jsonl"))
         record["per_layer"] = out
     else:

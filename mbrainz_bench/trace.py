@@ -7,7 +7,9 @@ tasks, task time, GC time, shuffle, spill and input bytes its calls caused.
 Spans are kept in memory and written out once, by `write`.
 
 A disabled tracer records nothing and touches no Spark state, so the
-untraced run pays only a context-manager call per span.
+untraced run pays only a context-manager call per span. `off()` disables
+an enabled tracer for a block, so a traced run can time some operations
+untraced.
 
 `wrap` swaps a function for a span-recording wrapper, so calls an engine
 function makes internally (`Importer.run_import` calling `load_type`, say)
@@ -155,6 +157,15 @@ class Tracer:
             self.spans.append(sp)
             self.self_s += time.perf_counter() - sp.end
 
+    @contextmanager
+    def off(self):
+        """Record no span inside the block."""
+        was, self.enabled = self.enabled, False
+        try:
+            yield
+        finally:
+            self.enabled = was
+
     def wrap(self, owner, attr: str, name, on_result=None) -> None:
         """Replace `owner.attr` by a wrapper that runs it inside a span.
         `name` is a span name or a function of the call's arguments;
@@ -170,7 +181,7 @@ class Tracer:
             span_name = name(*args, **kwargs) if callable(name) else name
             with tracer.span(span_name) as sp:
                 result = original(*args, **kwargs)
-                if on_result is not None:
+                if on_result is not None and sp is not None:
                     on_result(sp, result, *args, **kwargs)
                 return result
 

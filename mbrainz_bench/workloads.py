@@ -7,32 +7,50 @@ exception inside an operation counts as a failed operation; the run goes
 on.
 
 import  EDN corpus -> `Importer.run_import` into a fresh warehouse ->
-        `build_entity_tables`, then the exactly-once re-run (twice).
+        `build_entity_tables`, then the exactly-once re-run (REIMPORTS times).
 serve   a datom store materialised from the corpus's entity tables; a
-        read-only phase of verbatim Datomic queries and `pull_many`
-        calls, then a write phase through `connect(...)`: `transact`
-        (add / retract / cas), a read-back of each write, and
-        `request_index` after each write.
+        write phase through `connect(...)`: `transact` (add / retract /
+        cas), a read-back of each write, and `request_index` after every
+        `INDEX_EVERY` writes; then a read-only phase of verbatim Datomic
+        queries and `pull_many` calls on a second copy of the store.
+
+Both run a fixed number of operations, the same on every run and
+machine, so every median is taken over the same mix; `seconds` is
+accepted for the common interface.
 
 In a traced run, spans wrap the calls into each module; see `trace.py`.
+Half of the repeated operations run with tracing off and are sampled
+apart (kind + `.untraced`), so the tracing overhead is traced minus
+untraced on the same operations in the same run.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import random
 import shutil
 import statistics
 import time
+from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass, field
 
 from . import corpus
 
-IMPORT_SCALE = 0.02   # ~3k raw entity rows: one import pass is job-bound
-SERVE_SCALE = 0.05    # ~8.5k entities, ~60k datoms
-QUERY_SHARE = 0.25    # share of the window for the read-only loop
-MIN_QUERY_ROUNDS = 2  # whole rounds of the five query templates
-MIN_WRITES = 4        # write cycles, however slow the machine is
+IMPORT_SCALE = 0.02   # ~3.4k raw entity rows: one import pass is job-bound
+SERVE_SCALE = 0.05    # ~1.4k entities, ~7.9k datoms
+QUERY_ROUNDS = 3      # measured rounds of the five read templates
+# Datomic indexes when the memory index passes `memory-index-threshold`
+# (32 MB by default), not after every transaction, so reads between index
+# jobs see a growing unindexed log suffix. One-op transactions would take
+# tens of thousands of writes to reach that threshold; the benchmark keeps
+# the shape at a size a run can hold: the suffix grows from 1 to
+# INDEX_EVERY transactions, then one `request_index` folds it in.
+INDEX_EVERY = 2
+WRITE_GROUPS = 5      # measured groups of INDEX_EVERY writes + one index
+# query rounds and write groups before the window: the first index jobs
+# and query rounds after start-up still cost a third more than later ones
+WARMUP_ROUNDS = 2
 REIMPORTS = 2
 SETUP_ROUNDS = 3
 
@@ -48,8 +66,11 @@ class Result:
     facts: dict = field(default_factory=dict)     # sizes, counts, checks
     measured_s: float = 0.0
     measured_cpu_s: float = 0.0
+    untraced: bool = False                        # inside `_untraced`
 
     def sample(self, kind: str, took: tuple[float, float]) -> None:
+        if self.untraced:
+            kind += ".untraced"
         self.samples.setdefault(kind, []).append(took[0])
         self.cpu.setdefault(kind, []).append(took[1])
 
@@ -71,6 +92,26 @@ def _median_pair(pairs: list[tuple[float, float]]) -> tuple[float, float]:
     """Median (wall, CPU) of repeated set-up rounds, each taken separately."""
     return (statistics.median(p[0] for p in pairs),
             statistics.median(p[1] for p in pairs))
+
+
+@contextmanager
+def _untraced(res: Result, tracer):
+    """A block run with spans off and its samples kept apart, in a traced
+    run; in an untraced run, just the block."""
+    if not tracer.enabled:
+        yield
+        return
+    res.untraced = True
+    try:
+        with tracer.off():
+            yield
+    finally:
+        res.untraced = False
+
+
+def _alternate(res: Result, tracer, i: int):
+    """Every second repetition of an operation runs untraced."""
+    return _untraced(res, tracer) if i % 2 else nullcontext()
 
 
 def _timed(clock, fn):
@@ -102,7 +143,7 @@ def run_import(spark, tracer, clock, work: str, seed: int, seconds: float) -> Re
     res.facts["rows"] = expected["rows"]
     res.facts["entity_rows"] = expected["entity_rows"]
     if tracer.enabled:
-        _wrap_import_layers(tracer, expected)
+        _wrap_import_layers(tracer)
 
     warehouse = os.path.join(work, "warehouse")
     t0, c0 = clock.now()
@@ -125,11 +166,11 @@ def run_import(spark, tracer, clock, work: str, seed: int, seconds: float) -> Re
         except Exception as exc:  # noqa: BLE001
             tables = None
             res.error("build_entity_tables", exc)
-        for _ in range(REIMPORTS):
+        for i in range(REIMPORTS):
             try:
-                with tracer.span("pipeline.reimport"):
+                with _alternate(res, tracer, i), tracer.span("pipeline.reimport"):
                     again, s = _timed(clock, lambda: importer.run_import(warehouse))
-                res.sample("reimport", s)
+                    res.sample("reimport", s)
                 res.check(
                     all(again[t].get("txes") == 0 for t in corpus.ENTITY_TYPES),
                     f"re-run was not a no-op: {again}",
@@ -141,6 +182,7 @@ def run_import(spark, tracer, clock, work: str, seed: int, seconds: float) -> Re
     _check_import(spark, res, warehouse, tables, expected)
     if tracer.enabled:
         tracer.unwrap_all()
+        _count_attempted(tracer, warehouse)
         _parse_probe(tracer, importer, res, expected)
     return res
 
@@ -177,7 +219,7 @@ def _check_import(spark, res: Result, warehouse: str, tables, expected: dict) ->
         res.error("entity table counts", exc)
 
 
-def _wrap_import_layers(tracer, expected: dict) -> None:
+def _wrap_import_layers(tracer) -> None:
     from mbrainz_importer_spark import pipeline
     from mbrainz_importer_spark.operators import idempotency, transform
 
@@ -188,13 +230,30 @@ def _wrap_import_layers(tracer, expected: dict) -> None:
     tracer.wrap(pipeline, "assign_batch_ids", "operators.batching")
     tracer.wrap(pipeline, "to_envelopes", "operators.batching")
 
-    def written(sp, result, sink, *_):
+    def written(sp, result, sink, batches, *_):
         sp.attrs["batches_written"] = result.get("txes", 0)
-        sp.attrs["batches_attempted"] = expected["batches"].get(
-            os.path.basename(sink.path.rstrip("/")), 0)
+        sp.attrs["input"] = batches  # counted by `_count_attempted`
 
     tracer.wrap(idempotency.IdempotentParquetSink, "load",
                 "operators.idempotency.write", written)
+
+
+def _count_attempted(tracer, warehouse: str) -> None:
+    """Traced runs only, after the measured window: the batches each
+    `IdempotentParquetSink.load` call was handed (distinct batch ids of
+    its input frame). A `load_type` call that took the completed-import
+    fast path never calls `load`; it attempted the batches its marker
+    records and wrote none."""
+    loads = tracer.named("operators.idempotency.write")
+    for sp in loads:
+        frame = sp.attrs.pop("input")
+        sp.attrs["batches_attempted"] = frame.select("batch_id").distinct().count()
+    for t in corpus.ENTITY_TYPES:
+        for sp in tracer.named(f"pipeline.load_type.{t}"):
+            if not any(sp.start <= w.start <= sp.end for w in loads):
+                with open(f"{warehouse}/loaded/{t}/_IMPORT_COMPLETE.json",
+                          encoding="utf-8") as fh:
+                    sp.attrs["fast_path_batches"] = json.load(fh)["n_batches"]
 
 
 def _parse_probe(tracer, importer, res: Result, expected: dict) -> None:
@@ -352,17 +411,18 @@ def run_serve(spark, tracer, clock, work: str, seed: int, seconds: float) -> Res
             return None
 
     n_writes = 0
+    unindexed = 0  # ops in the log suffix that request_index has not folded in
 
     def write_cycle() -> None:
-        """transact one form, read the value back, fold the log into the
-        store with request_index."""
-        nonlocal n_writes
+        """transact one form, then read the value back from `db()`."""
+        nonlocal n_writes, unindexed
         form, e, a = _next_write(rng, model, entities, n_writes)
         n_writes += 1
         try:
             with tracer.span("plans.client.transact"):
                 report, s = _timed(clock, lambda: conn.transact([form]))
             res.sample("transact", s)
+            unindexed += report["n_ops"]
         except Exception as exc:  # noqa: BLE001
             res.error(f"transact {form[0]}", exc)
             return
@@ -370,8 +430,7 @@ def run_serve(spark, tracer, clock, work: str, seed: int, seconds: float) -> Res
             def read_back():
                 with tracer.span("plans.client.db.build"):
                     db = conn.db()
-                with tracer.span("plans.client.db.read_action",
-                                 unindexed_ops=report["n_ops"]):
+                with tracer.span("plans.client.db.read_action", unindexed_ops=unindexed):
                     return [r[0] for r in db.where((F.col("e") == e) & (F.col("a") == a))
                             .select("v").collect()]
 
@@ -382,13 +441,20 @@ def run_serve(spark, tracer, clock, work: str, seed: int, seconds: float) -> Res
                       f"read-your-write {form[0]} {e} {a}: {got} != {want}")
         except Exception as exc:  # noqa: BLE001
             res.error("read after write", exc)
+
+    def write_group() -> None:
+        """INDEX_EVERY writes, then request_index folds the suffix in."""
+        nonlocal unindexed
+        for _ in range(INDEX_EVERY):
+            write_cycle()
         try:
             before = store_file_census(conn.store_path) if tracer.enabled else None
-            with tracer.span("plans.client.request_index", ops=report["n_ops"]) as sp:
+            with tracer.span("plans.client.request_index", ops=unindexed) as sp:
                 _, s = _timed(clock, conn.request_index)
             if sp is not None:
                 _census_delta(sp, before, store_file_census(conn.store_path))
             res.sample("index", s)
+            unindexed = 0
         except Exception as exc:  # noqa: BLE001
             res.error("request_index", exc)
 
@@ -405,43 +471,39 @@ def run_serve(spark, tracer, clock, work: str, seed: int, seconds: float) -> Res
         except Exception as exc:  # noqa: BLE001
             res.error("store check", exc)
 
-    # warm-up: every query template once, and two full write cycles
+    # warm-up: every query template on its first parameter draws, and the
+    # write groups
     w0, c0 = clock.now()
-    for template in ("point_lookup", "ref_join", "filtered_aggregate",
-                     "unbound_attribute", "pull_many"):
-        query(next(i for i in instances if i["template"] == template))
-    write_cycle()
-    write_cycle()
+    cycle = len(corpus.QUERIES) + 1
+    for inst in instances[:cycle * WARMUP_ROUNDS]:
+        query(inst)
+    for _ in range(WARMUP_ROUNDS):
+        write_group()
     check_store()
     res.samples.clear()
     res.cpu.clear()
     w1, c1 = clock.now()
     res.setup_parts["warmup"] = (w1 - w0, c1 - c0)
 
+    # the writes come first, straight after the warm-up's write groups: the
+    # first index job after a switch from queries cost a third more
     t0, c0 = clock.now()
     with tracer.span("workload.serve"):
-        # whole rounds of the template cycle, so every run's median is
-        # taken over the same mix of templates; each loop also runs a
-        # minimum count, so a slow machine does not leave a median of one
-        deadline = t0 + seconds * QUERY_SHARE
-        cycle = len(corpus.QUERIES) + 1
-        i = 0
-        while time.perf_counter() < deadline or i % cycle or i < MIN_QUERY_ROUNDS * cycle:
-            inst = instances[i % len(instances)]
-            took = query(inst)
-            if took is not None:
-                res.sample("pull" if inst["template"] == "pull_many" else "query", took)
-                res.sample(f"template.{inst['template']}", took)
-            i += 1
-        res.facts["queries"] = i
-        t_q = time.perf_counter()
-        res.facts["query_phase_s"] = t_q - t0
-        deadline = t0 + seconds
-        first = n_writes
-        while time.perf_counter() < deadline or n_writes - first < MIN_WRITES:
-            write_cycle()
-        res.facts["writes"] = n_writes - first
-        res.facts["write_phase_s"] = time.perf_counter() - t_q
+        for g in range(WRITE_GROUPS):
+            with _alternate(res, tracer, g):
+                write_group()
+        t_w = time.perf_counter()
+        res.facts["write_phase_s"] = t_w - t0
+        for r in range(QUERY_ROUNDS):
+            with _alternate(res, tracer, r):
+                first = cycle * (WARMUP_ROUNDS + r)
+                for inst in instances[first:first + cycle]:
+                    took = query(inst)
+                    if took is not None:
+                        res.sample("pull" if inst["template"] == "pull_many" else "query",
+                                   took)
+                        res.sample(f"template.{inst['template']}", took)
+        res.facts["query_phase_s"] = time.perf_counter() - t_w
     res.measured_s = time.perf_counter() - t0
     res.measured_cpu_s = clock.cpu() - c0
     check_store()

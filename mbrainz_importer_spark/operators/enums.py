@@ -99,17 +99,25 @@ def assert_no_misses(df: DataFrame) -> DataFrame:
     """Single-action validation of every deferred `__miss_*` indicator:
     raises MissingDimensionValue naming the offending columns, returns the
     frame with indicators dropped. The one job replaces N per-column guard
-    jobs (each of which re-ran the whole upstream pipeline)."""
+    jobs (each of which re-ran the whole upstream pipeline).
+
+    The guard is a full aggregate, not a `limit(n).collect()`: a limit
+    scans partitions incrementally over several jobs and never fills a
+    persisted input in one pass, while one count reads every partition
+    once. The sample of offending rows is taken only on failure."""
     miss_cols = [c for c in df.columns if c.startswith(MISS_PREFIX)]
     if not miss_cols:
         return df
     any_miss = None
     for c in miss_cols:
         any_miss = F.col(c) if any_miss is None else (any_miss | F.col(c))
-    sample = df.where(any_miss).select(*miss_cols).limit(5).collect()
-    if sample:
+    [(n_miss,)] = df.agg(F.count(F.when(any_miss, 1))).collect()
+    if n_miss:
+        sample = df.where(any_miss).select(*miss_cols).limit(5).collect()
         bad = sorted({
             c[len(MISS_PREFIX):] for r in sample for c in miss_cols if r[c]
         })
-        raise MissingDimensionValue(f"could not resolve dimension column(s): {bad}")
+        raise MissingDimensionValue(
+            f"could not resolve dimension column(s): {bad} ({n_miss} rows)"
+        )
     return df.drop(*miss_cols)

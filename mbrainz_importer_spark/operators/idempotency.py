@@ -61,15 +61,26 @@ class IdempotentParquetSink:
         """load-parallel analog (batch.clj:115-135): write all not-yet-done
         batches; parallelism is partition-level. Returns
         {'txes': n_batches_written, 'datoms': n_rows_written} — the
-        reference's result fold (G8)."""
-        todo = self.filter_new(batches, spark)
-        stats = todo.agg(
-            F.countDistinct(BATCH_ID_COL).alias("txes"),
-            F.count(F.lit(1)).alias("datoms"),
-        ).collect()[0]
-        if stats["txes"]:
-            todo.write.mode("append").parquet(self.path)
-        return {"txes": stats["txes"], "datoms": stats["datoms"]}
+        reference's result fold (G8).
+
+        The not-yet-done rows are persisted for the call: the stats
+        aggregate computes them once and every append reads them back, so
+        the input plan (and the anti-join) runs once, not once per action."""
+        todo = self.filter_new(batches, spark).persist()
+        try:
+            stats = todo.agg(
+                F.countDistinct(BATCH_ID_COL).alias("txes"),
+                F.count(F.lit(1)).alias("datoms"),
+            ).collect()[0]
+            if stats["txes"]:
+                self._append(todo)
+            return {"txes": stats["txes"], "datoms": stats["datoms"]}
+        finally:
+            todo.unpersist()
+
+    def _append(self, todo: DataFrame) -> None:
+        """Commit the new batches (one committer-atomic append)."""
+        todo.write.mode("append").parquet(self.path)
 
 
 def load_envelopes(
@@ -149,15 +160,12 @@ class TxMetadataParquetSink(IdempotentParquetSink):
 
     def load(self, batches: DataFrame, spark: SparkSession) -> dict:
         self.heal(spark)
-        todo = self.filter_new(batches, spark)
-        stats = todo.agg(
-            F.countDistinct(BATCH_ID_COL).alias("txes"),
-            F.count(F.lit(1)).alias("datoms"),
-        ).collect()[0]
-        if stats["txes"]:
-            todo.write.mode("append").parquet(self.path)
-            tx_rows = todo.groupBy(BATCH_ID_COL).agg(
-                F.count(F.lit(1)).alias("n_datoms")
-            )
-            tx_rows.write.mode("append").parquet(self.tx_path)
-        return {"txes": stats["txes"], "datoms": stats["datoms"]}
+        return super().load(batches, spark)
+
+    def _append(self, todo: DataFrame) -> None:
+        """Data append, then tx append — both read the persisted rows."""
+        super()._append(todo)
+        tx_rows = todo.groupBy(BATCH_ID_COL).agg(
+            F.count(F.lit(1)).alias("n_datoms")
+        )
+        tx_rows.write.mode("append").parquet(self.tx_path)

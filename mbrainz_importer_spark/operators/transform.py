@@ -11,6 +11,10 @@ batch files (subsets/batches/*.edn) were produced with them:
   `:begin_date_date` — keys that never occur in the data — so artist
   startMonth/startDay are silently dropped. Golden artists.edn confirms.
 
+A transform resolves its dimensions and leaves one `__miss_*` indicator
+per resolved column; the caller checks them all in one action with
+`enums.assert_no_misses`, which raises on a miss and drops them (the
+import checks the persisted rows, so the check's job also fills them).
 Output is columnar (one table per entity type, metaschema/mbrainz.edn
 layout); `to_tx_data` projects a row into the reference's nested tx-map
 shape for golden comparison and EDN export.
@@ -21,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .enums import assert_no_misses, resolve_enum
+from .enums import MISS_PREFIX, resolve_enum
 
 
 def _keep_idx(df: DataFrame, cols: list) -> list:
@@ -54,8 +58,7 @@ def transform_artists(df: DataFrame, enums_dim: DataFrame, super_dim: DataFrame)
     ]))
     out = _enum(out, "type", enums_dim, "artist_type")
     out = _enum(out, "gender", enums_dim, "gender")
-    out = _super(out, "country", super_dim, "countries")
-    return assert_no_misses(out)
+    return _super(out, "country", super_dim, "countries")
 
 
 def transform_areleases(df: DataFrame, enums_dim: DataFrame, super_dim: DataFrame) -> DataFrame:
@@ -66,7 +69,7 @@ def transform_areleases(df: DataFrame, enums_dim: DataFrame, super_dim: DataFram
         F.col("type"),
         F.col("artist_credit").alias("artistCredit"),
     ]))
-    return assert_no_misses(_enum(out, "type", enums_dim, "release_group_type"))
+    return _enum(out, "type", enums_dim, "release_group_type")
 
 
 def transform_releases(df: DataFrame, enums_dim: DataFrame, super_dim: DataFrame) -> DataFrame:
@@ -92,8 +95,7 @@ def transform_releases(df: DataFrame, enums_dim: DataFrame, super_dim: DataFrame
     out = _enum(out, "packaging", enums_dim, "release_packaging")
     out = _super(out, "country", super_dim, "countries")
     out = _super(out, "language", super_dim, "langs")
-    out = _super(out, "script", super_dim, "scripts")
-    return assert_no_misses(out)
+    return _super(out, "script", super_dim, "scripts")
 
 
 def transform_labels(df: DataFrame, enums_dim: DataFrame, super_dim: DataFrame) -> DataFrame:
@@ -112,8 +114,7 @@ def transform_labels(df: DataFrame, enums_dim: DataFrame, super_dim: DataFrame) 
         F.col("end_date_day").alias("endDay"),
     ]))
     out = _enum(out, "type", enums_dim, "label_type")
-    out = _super(out, "country", super_dim, "countries")
-    return assert_no_misses(out)
+    return _super(out, "country", super_dim, "countries")
 
 
 def transform_releases_artists(df: DataFrame, *_dims) -> DataFrame:
@@ -148,7 +149,7 @@ def transform_media(df: DataFrame, enums_dim: DataFrame, super_dim: DataFrame) -
     Track order inside a medium is by position — recoverable, unlike the
     reference's incidental reversed-conj list order.
     """
-    mt = assert_no_misses(_enum(df, "format", enums_dim, "medium_format"))
+    mt = _enum(df, "format", enums_dim, "medium_format")
     tracks = (
         mt.groupBy("id", "tracknum")
         .agg(
@@ -170,6 +171,8 @@ def transform_media(df: DataFrame, enums_dim: DataFrame, super_dim: DataFrame) -
     if "_row_idx" in mt.columns:
         # order key for batching: a medium appears where its first track does
         hdr_aggs.append(F.min("_row_idx").alias("_row_idx"))
+    # a medium misses its format dim when any of its track rows does
+    hdr_aggs += [F.max(c).alias(c) for c in mt.columns if c.startswith(MISS_PREFIX)]
     media_hdr = mt.groupBy("id").agg(*hdr_aggs)
     nested = tracks.groupBy("id").agg(
         F.array_sort(

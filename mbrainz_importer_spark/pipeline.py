@@ -7,24 +7,31 @@ The reference's entry point A: sequential stages in `import-order`
   like the reference's slurp (importer.clj:257-269), then broadcast.
 
   entity stages — distributed: EDN source -> per-type transform (broadcast
-  dim resolution with zero-miss guards) -> deterministic batching ->
-  envelope DataFrame -> idempotent sink.
+  dim resolution) persisted once -> zero-miss guard -> deterministic
+  batching -> numbered rows (batch_id, data columns, _rn) -> idempotent
+  sink. The EDN file is parsed once per stage; every later action (the
+  guard, the batching aggregates, the sink's stats and append) reads the
+  persisted rows.
 
 The intermediate "batch file" of the reference (subsets/batches/*.edn) is
-an envelope DataFrame here, persisted as Parquet; EDN export exists for
-golden-format parity only.
+an envelope DataFrame here (`create_batches`), used for golden-format
+parity and EDN export only; the load writes the numbered rows directly,
+one row per entity with its batch_id, which is what exploding the
+envelopes gave back.
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from . import schema as SCH
 from .operators.batching import assign_batch_ids, to_envelopes
-from .operators.enums import enums_dim, super_enums_dim
+from .operators.enums import assert_no_misses, enums_dim, super_enums_dim
+from .operators.idempotency import BATCH_ID_COL, IdempotentParquetSink
 from .operators.transform import TRANSFORMS, to_tx_data
 from .sources.edn_source import read_edn_entities, read_edn_forms_local
 
@@ -39,10 +46,27 @@ DEFAULT_BATCH_SIZE = 100  # importer/batch.clj:14 "suggest 100"
 DIM_STAGES = frozenset({"schema", "enums", "super-enums"})
 
 
+@contextmanager
+def _phase(sc: SparkContext, description: str):
+    """Name the Spark jobs of one import phase in the UI
+    (`import:<type>:<phase>`), restoring the caller's description after."""
+    prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(description)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(prior)
+
+
 @dataclass
 class Importer:
     """Analog of ImporterImpl (importer.clj:203-255): basedir + broadcastable
-    dimension DataFrames."""
+    dimension DataFrames.
+
+    The dims are driver-literal LocalRelations and stay uncached: their
+    rows already live on the driver and a broadcast costs one small job
+    either way, so a cache would add only its own fill job and a
+    persisted RDD that outlives the import."""
 
     spark: SparkSession
     basedir: str
@@ -50,8 +74,8 @@ class Importer:
     supers: DataFrame = field(init=False)
 
     def __post_init__(self) -> None:
-        self.enums = enums_dim(self.spark, f"{self.basedir}/entities/enums.edn").cache()
-        self.supers = super_enums_dim(self.spark, self.basedir).cache()
+        self.enums = enums_dim(self.spark, f"{self.basedir}/entities/enums.edn")
+        self.supers = super_enums_dim(self.spark, self.basedir)
 
     # -- sources ----------------------------------------------------------
     def entities_file(self, type_name: str) -> str:
@@ -98,10 +122,26 @@ class Importer:
         return out
 
     # -- entity stages (distributed) --------------------------------------
-    def transformed(self, type_name: str) -> DataFrame:
-        """EDN source -> per-type transform with dim resolution."""
+    def resolved(self, type_name: str) -> DataFrame:
+        """EDN source -> per-type transform with dim resolution, still
+        carrying the `__miss_*` indicators `assert_no_misses` checks."""
         raw = self.read_entities(type_name)
         return TRANSFORMS[type_name](raw, self.enums, self.supers)
+
+    def transformed(self, type_name: str) -> DataFrame:
+        """Resolved rows, every dimension lookup checked (one action)."""
+        return assert_no_misses(self.resolved(type_name))
+
+    @staticmethod
+    def numbered(t: DataFrame, type_name: str, batch_size: int) -> DataFrame:
+        """Deterministic batching of transformed rows in source order:
+        DataFrame[batch_id, <data columns>, _rn]. `_rn` is the global row
+        number; the sink keeps it so unique-identity upserts (J2) have
+        Datomic's later-assertion-wins order available (duplicate gids in
+        a stream merge in stream order; see plans.metaschema compaction)."""
+        data_cols = [c for c in t.columns if c != "_row_idx"]
+        batched = assign_batch_ids(t, batch_size, type_name, ["_row_idx"], rn_col="_rn")
+        return batched.select(BATCH_ID_COL, *data_cols, "_rn")
 
     def create_batches(
         self, type_name: str, batch_size: int = DEFAULT_BATCH_SIZE
@@ -109,23 +149,26 @@ class Importer:
         """Entry point B (create-batch-file, importer.clj:279-296):
         transform + deterministic batching + envelope assembly.
         Returns DataFrame[batch_id, data array<struct>, __first_rn]."""
-        t = self.transformed(type_name)
-        data_cols = [c for c in t.columns if c != "_row_idx"]
-        batched = assign_batch_ids(t, batch_size, type_name, ["_row_idx"])
-        # carry the global row number into the envelope as `_rn`: the load
-        # phase persists it so unique-identity upserts (J2) have Datomic's
-        # later-assertion-wins order available (duplicate gids in a stream
-        # merge in stream order; see plans.metaschema compaction)
-        batched = batched.withColumn("_rn", F.col("rn"))
-        return to_envelopes(batched, data_cols + ["_rn"])
+        rows = self.numbered(self.transformed(type_name), type_name, batch_size)
+        return to_envelopes(rows, rows.columns[1:], rn_col="_rn")
 
     # -- load phase (entry point C, importer.clj:298-316) ------------------
     def load_type(
         self, type_name: str, warehouse: str, batch_size: int = DEFAULT_BATCH_SIZE
     ) -> dict:
         """Idempotent load of one entity stage into the warehouse:
-        batches -> anti-join against already-loaded ids -> append with
-        batch_id atomic-with-data. Re-running is a no-op ({'txes': 0}).
+        numbered rows -> anti-join against already-loaded batch ids ->
+        append with batch_id atomic-with-data. Re-running is a no-op
+        ({'txes': 0}).
+
+        One parse per stage: the transformed, enum-resolved rows are
+        persisted once and every later action reads them — the miss
+        guard (whose single aggregate fills the cache), the batching
+        aggregates and the sink's load. This call owns that frame and
+        unpersists it on every exit, the guard's failure included. The
+        numbered rows go to the sink as they are; envelopes are built
+        only by `create_batches` for the golden/EDN export. The phases'
+        jobs are described `import:<type>:resolve|number|write`.
 
         Fast path: a completed load writes a marker with its batch count;
         a re-run whose sink still matches the marker skips source parsing
@@ -142,8 +185,6 @@ class Importer:
         mismatch raises instead of proceeding."""
         import json as _json
         import os
-
-        from .operators.idempotency import IdempotentParquetSink, load_envelopes
 
         sink_path = f"{warehouse}/loaded/{type_name}"
         marker = f"{sink_path}/_IMPORT_COMPLETE.json"
@@ -175,9 +216,20 @@ class Importer:
             with open(size_file, "w", encoding="utf-8") as fh:
                 _json.dump({"batch_size": batch_size}, fh)
 
-        env = self.create_batches(type_name, batch_size).drop("__first_rn")
-        result = load_envelopes(sink, env, self.spark)
-        n_batches = sink.done_ids(self.spark).count()
+        sc = self.spark.sparkContext
+        resolved = None
+        try:
+            with _phase(sc, f"import:{type_name}:resolve"):
+                resolved = self.resolved(type_name).persist()
+                checked = assert_no_misses(resolved)
+            with _phase(sc, f"import:{type_name}:number"):
+                rows = self.numbered(checked, type_name, batch_size)
+            with _phase(sc, f"import:{type_name}:write"):
+                result = sink.load(rows, self.spark)
+                n_batches = sink.done_ids(self.spark).count()
+        finally:
+            if resolved is not None:
+                resolved.unpersist()
         with open(marker, "w", encoding="utf-8") as fh:
             _json.dump({"n_batches": n_batches, "batch_size": batch_size}, fh)
         return result
